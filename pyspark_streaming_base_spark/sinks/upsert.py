@@ -13,17 +13,22 @@ implements the copy-on-write flavor the way a table format would:
   bucket's current parquet files, written atomically via tmp +
   ``os.replace``);
 * ``apply(batch_df, batch_id)`` rewrites ONLY the buckets containing the
-  batch's keys — and does it in ONE Spark job: the current snapshots of
-  every touched bucket union with the batch, a single exchange
-  repartitions by ``_bucket``, keep-latest runs bucket-locally (the
-  dedup and the rank window both include ``_bucket`` in their grouping,
-  so the one exchange satisfies both), and ``partitionBy("_bucket")``
-  writes every merged bucket from that one job. The driver then promotes
-  the staged files into the per-bucket directories (pure ``os.replace``
-  metadata ops) and commits each bucket's manifest. Untouched buckets
-  are untouched — the 100 TB property: write amplification is (touched
-  buckets / N) of the table, not the table, and wall-clock is one job
-  per batch, not one job per touched bucket;
+  batch's keys. The bucket-tagged batch is persisted, so its upstream
+  plan (for a ``foreachBatch`` DataFrame: the source read, the shuffle,
+  the state-store restore and commit) is evaluated ONCE, however many
+  actions follow. A bucket-id pass collects the touched bucket ids;
+  then ONE merge write: the current snapshots of every touched bucket
+  union with the batch, a single exchange repartitions by ``_bucket``
+  (AQE sizes it — each bucket lands in one task, so one file per
+  bucket), keep-latest runs bucket-locally (the dedup and the rank
+  window both include ``_bucket`` in their grouping, so the one
+  exchange satisfies both), and ``partitionBy("_bucket")`` writes every
+  merged bucket. The driver then promotes the staged files into the
+  per-bucket directories (pure ``os.replace`` metadata ops) and commits
+  each bucket's manifest. Untouched buckets are untouched — the 100 TB
+  property: write amplification is (touched buckets / N) of the table,
+  not the table, and the job count per batch does not grow with the
+  number of touched buckets;
 * readers (``read``) take each bucket's HIGHEST-numbered manifest — a
   consistent per-bucket snapshot; concurrent readers never see a
   half-merged bucket (old manifest stays valid until the new one lands);
@@ -60,7 +65,8 @@ Scale tuning: ``n_buckets`` trades write amplification against small
 files — size it so one bucket ≈ a few target files. At real scale the
 same layout upgrades to partition+bucket (date/bucket) without changing
 the protocol — see :class:`PartitionedUpsertTable`, whose ``apply`` is
-the same single job over (partition, bucket) pairs.
+the same persisted batch and single merge write over (partition, bucket)
+pairs.
 """
 
 from __future__ import annotations
@@ -227,12 +233,15 @@ class UpsertTable:
 
     # -- write path ----------------------------------------------------------
     def apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Merge one batch of change rows in ONE Spark job; rewrites only
-        touched buckets. The job's plan is: union(current snapshots of
-        touched buckets, batch) → single exchange on ``_bucket`` →
-        bucket-local dedup + rank (no further exchange — both group on
-        ``_bucket`` first) → ``partitionBy('_bucket')`` write. Manifests
-        commit from the job's output listing, after the data lands.
+        """Merge one batch of change rows; rewrites only touched buckets.
+        The aligned, bucket-tagged batch is persisted and evaluated once,
+        then feeds two actions: a bucket-id pass (the touched ids reach
+        the driver) and ONE merge write whose plan is: union(current
+        snapshots of touched buckets, batch) → single AQE-sized exchange
+        on ``_bucket`` → bucket-local dedup + rank (no further exchange —
+        both group on ``_bucket`` first) → ``partitionBy('_bucket')``
+        write. The batch is unpersisted once the write ends. Manifests
+        commit from the write's output listing, after the data lands.
         """
         spark = batch_df.sparkSession
         # the merge keys must be present — a CDC row without its key or
@@ -258,35 +267,46 @@ class UpsertTable:
             align_schema,
         )
 
-        batch = align_schema(batch_df, target).withColumn(
-            "_bucket", self._bucket_expr()
+        # persisted: the bucket-id pass and the merge write are two
+        # actions, and a foreachBatch DataFrame re-runs its whole upstream
+        # plan (source read, shuffle, state-store restore/commit) per action
+        batch = (
+            align_schema(batch_df, target)
+            .withColumn("_bucket", self._bucket_expr())
+            .persist()
         )
-        # driver sees only bucket IDS (≤ n_buckets ints) — never data
-        touched = sorted(
-            r["_bucket"] for r in batch.select("_bucket").distinct().collect()
-        )
-        if not touched:
-            return
+        try:
+            # driver sees only bucket IDS (≤ n_buckets ints) — never data
+            touched = sorted(
+                r["_bucket"] for r in batch.select("_bucket").distinct().collect()
+            )
+            if not touched:
+                return
 
-        current_files = [f for b in touched for f in self._bucket_files(b)]
-        if current_files:
-            # explicit schema: pre-evolution files lack the new columns —
-            # the parquet reader null-fills them under the target schema
-            current = spark.read.schema(target).parquet(
-                *current_files
-            ).withColumn("_bucket", self._bucket_expr())
-            merged = current.unionByName(batch)
-        else:
-            merged = batch
-        latest = _keep_latest(
-            merged.repartition(len(touched), F.col("_bucket")),
-            self.key_cols,
-            self.seq_col,
-            self.delete_col,
-            group_extra=["_bucket"],
-        )
-        staging = self._staging_dir()
-        latest.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+            current_files = [f for b in touched for f in self._bucket_files(b)]
+            if current_files:
+                # explicit schema: pre-evolution files lack the new columns —
+                # the parquet reader null-fills them under the target schema
+                current = spark.read.schema(target).parquet(
+                    *current_files
+                ).withColumn("_bucket", self._bucket_expr())
+                merged = current.unionByName(batch)
+            else:
+                merged = batch
+            # no partition count: AQE coalesces the shuffle to the data's
+            # size, and each bucket still hashes into exactly one task, so
+            # the write still yields one file per touched bucket
+            latest = _keep_latest(
+                merged.repartition(F.col("_bucket")),
+                self.key_cols,
+                self.seq_col,
+                self.delete_col,
+                group_extra=["_bucket"],
+            )
+            staging = self._staging_dir()
+            latest.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+        finally:
+            batch.unpersist()
         new_files = self._promote_staging(staging)
         for b in touched:
             # a touched bucket always has ≥1 surviving row (keep-latest of
@@ -301,8 +321,9 @@ class UpsertTable:
         """Maintenance job: garbage-collect tombstones whose sequence is
         below ``drop_tombstones_before`` (i.e. no straggler older than the
         delete can still arrive — the caller's retention watermark) and
-        rewrite every non-empty bucket as one snapshot — in ONE Spark job
-        (same union → bucket exchange → partitionBy shape as ``apply``).
+        rewrite every non-empty bucket as one snapshot — in ONE merge
+        write (the same AQE-sized bucket exchange → partitionBy shape as
+        ``apply``), however many buckets are non-empty.
         Commits under each bucket's next manifest id, so readers flip
         atomically per bucket.
         """
@@ -333,7 +354,7 @@ class UpsertTable:
         )
         staging = self._staging_dir()
         (
-            kept.repartition(len(last_ids), F.col("_bucket"))
+            kept.repartition(F.col("_bucket"))
             .write.partitionBy("_bucket")
             .mode("overwrite")
             .parquet(staging)
@@ -416,10 +437,12 @@ class PartitionedUpsertTable:
     This is the layout promise made concrete: a batch only ever touches
     (its partitions) × (its key buckets), so steady-state CDC against a
     date-partitioned 100 TB table rewrites a few buckets of a few recent
-    dates — and, like :class:`UpsertTable`, does it in ONE Spark job per
-    batch: a single exchange on (``_part``, ``_bucket``), partition-local
-    keep-latest, one ``partitionBy('_part', '_bucket')`` write, then
-    per-(partition, bucket) manifest commits from the staged listing.
+    dates — and, like :class:`UpsertTable`, evaluates the persisted batch
+    once, collects its (partition, bucket) pairs, then runs ONE merge
+    write: a single AQE-sized exchange on (``_part``, ``_bucket``),
+    partition-local keep-latest, one ``partitionBy('_part', '_bucket')``
+    write, then per-(partition, bucket) manifest commits from the staged
+    listing.
     Partition values must be stringable and filesystem-safe (dates,
     hours, small enums — Spark's partition-dir escaping would otherwise
     diverge from the ``part=<value>`` layout). The driver handles
@@ -467,46 +490,53 @@ class PartitionedUpsertTable:
         nb = self._child_args["n_buckets"]
         bucket_expr = F.pmod(F.xxhash64(*keys), F.lit(nb))
 
-        batch = batch_df.withColumn(
-            "_part", F.col(pc).cast("string")
-        ).withColumn("_bucket", bucket_expr)
-        # driver sees only (partition value, bucket id) pairs — bounded by
-        # the batch's own partition spread × n_buckets, never data
-        pairs = sorted(
-            (r["_part"], r["_bucket"])
-            for r in batch.select("_part", "_bucket").distinct().collect()
+        # persisted for the same reason as UpsertTable.apply: the pair
+        # pass and the merge write must not each re-run the upstream plan
+        batch = (
+            batch_df.withColumn("_part", F.col(pc).cast("string"))
+            .withColumn("_bucket", bucket_expr)
+            .persist()
         )
-        if not pairs:
-            return
-        children = {v: self._child(v) for v in sorted({v for v, _ in pairs})}
-        for child in children.values():
-            child._write_schema_once(batch_df)
-
-        current_files = [
-            f for v, b in pairs for f in children[v]._bucket_files(b)
-        ]
-        if current_files:
-            current = (
-                spark.read.parquet(*current_files)
-                .withColumn("_part", F.col(pc).cast("string"))
-                .withColumn("_bucket", bucket_expr)
+        try:
+            # driver sees only (partition value, bucket id) pairs — bounded
+            # by the batch's own partition spread × n_buckets, never data
+            pairs = sorted(
+                (r["_part"], r["_bucket"])
+                for r in batch.select("_part", "_bucket").distinct().collect()
             )
-            merged = current.unionByName(batch)
-        else:
-            merged = batch
-        latest = _keep_latest(
-            merged.repartition(len(pairs), F.col("_part"), F.col("_bucket")),
-            keys,
-            seq_col,
-            delete_col,
-            group_extra=["_part", "_bucket"],
-        )
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        (
-            latest.write.partitionBy("_part", "_bucket")
-            .mode("overwrite")
-            .parquet(staging)
-        )
+            if not pairs:
+                return
+            children = {v: self._child(v) for v in sorted({v for v, _ in pairs})}
+            for child in children.values():
+                child._write_schema_once(batch_df)
+
+            current_files = [
+                f for v, b in pairs for f in children[v]._bucket_files(b)
+            ]
+            if current_files:
+                current = (
+                    spark.read.parquet(*current_files)
+                    .withColumn("_part", F.col(pc).cast("string"))
+                    .withColumn("_bucket", bucket_expr)
+                )
+                merged = current.unionByName(batch)
+            else:
+                merged = batch
+            latest = _keep_latest(
+                merged.repartition(F.col("_part"), F.col("_bucket")),
+                keys,
+                seq_col,
+                delete_col,
+                group_extra=["_part", "_bucket"],
+            )
+            staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+            (
+                latest.write.partitionBy("_part", "_bucket")
+                .mode("overwrite")
+                .parquet(staging)
+            )
+        finally:
+            batch.unpersist()
         # promote staging/_part=<v>/_bucket=<b>/*.parquet into each
         # child's bucket dirs, then commit — pure metadata ops
         committed = set()

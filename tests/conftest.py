@@ -35,7 +35,6 @@ SLOW_MODULES = {
     "test_semdedup",
     "test_streaming_e2e",
     "test_transition_stream",
-    "test_upsert",
     "test_upsert_properties",
 }
 
@@ -49,6 +48,7 @@ SLOW_TESTS = {
     "test_streaming_write_exactly_once_across_restart",  # manifest_parquet
     "test_streaming_fold_twin_equals_batch_q186",  # quantiles
     "test_bpe_apply_matches_python_and_training_state",  # bpe
+    "test_soak_cdc_stream_with_restarts_compaction_and_deletes",  # upsert
 }
 
 #: registry smoke params whose single run exceeds ~15 s (still covered

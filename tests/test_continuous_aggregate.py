@@ -80,3 +80,13 @@ def test_streaming_window_agg_maintained_by_upsert(spark, tmp_path):
         ).collect()
     }
     assert got == want
+    # the stateful stage runs once per trigger, so its progress is not
+    # double-counted by the sink's two actions (bucket-id pass and merge
+    # write): no watermark keeps every group in state, and the last
+    # batch updated exactly the groups whose stored row it wrote
+    last = q.lastProgress
+    ops = last["stateOperators"][0]
+    assert ops["numRowsTotal"] == len(want)
+    assert ops["numRowsUpdated"] == (
+        tbl.read(spark).filter(F.col("_batch") == last["batchId"]).count()
+    )

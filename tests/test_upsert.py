@@ -90,8 +90,10 @@ def _count_jobs(spark, fn):
 
 
 def test_apply_job_count_independent_of_touched_buckets(spark, tmp_path):
-    """The single-job merge: job count must NOT grow with the number of
-    touched buckets (the r3 scale-killer was one job per bucket)."""
+    """The single merge write: job count must NOT grow with the number of
+    touched buckets (the r3 scale-killer was one job per bucket). Both
+    counted batches are 200 rows, because AQE's job count over the
+    persisted batch follows its row count, not the buckets it touches."""
     tbl_few = UpsertTable(
         str(tmp_path / "few"), key_cols=["k"], seq_col="seq", n_buckets=16
     )
@@ -105,8 +107,10 @@ def test_apply_job_count_independent_of_touched_buckets(spark, tmp_path):
     # seed both so the second apply exercises the read-merge path too
     tbl_few.apply(one_key, 0)
     tbl_many.apply(many_keys, 0)
+    # 200 versions of ONE key → one bucket touched
     jobs_few = _count_jobs(spark, lambda: tbl_few.apply(
-        spark.createDataFrame([(1, 2, "b")], ["k", "seq", "v"]), 1))
+        spark.createDataFrame([(1, 2 + i, "b") for i in range(200)],
+                              ["k", "seq", "v"]), 1))
     jobs_many = _count_jobs(spark, lambda: tbl_many.apply(
         spark.createDataFrame([(i, 2, "y") for i in range(200)],
                               ["k", "seq", "v"]), 1))
@@ -114,8 +118,9 @@ def test_apply_job_count_independent_of_touched_buckets(spark, tmp_path):
 
 
 def test_partitioned_apply_job_count_independent_of_pairs(spark, tmp_path):
-    """PartitionedUpsertTable.apply is also ONE job per batch, regardless
-    of how many (partition, bucket) pairs the batch touches."""
+    """PartitionedUpsertTable.apply is also ONE merge write per batch,
+    regardless of how many (partition, bucket) pairs the batch touches.
+    Both counted batches are 200 rows, as in the unpartitioned test."""
     from pyspark_streaming_base_spark.sinks.upsert import PartitionedUpsertTable
 
     def mk(name):
@@ -132,8 +137,11 @@ def test_partitioned_apply_job_count_independent_of_pairs(spark, tmp_path):
     t_one, t_many = mk("one"), mk("many")
     t_one.apply(spark.createDataFrame(one, cols), 0)
     t_many.apply(spark.createDataFrame(many, cols), 0)
+    # 200 versions of ONE key → one (partition, bucket) pair touched
     jobs_one = _count_jobs(spark, lambda: t_one.apply(
-        spark.createDataFrame([("2026-01-01", 1, 2, "b")], cols), 1))
+        spark.createDataFrame(
+            [("2026-01-01", 1, 2 + i, "b") for i in range(200)], cols
+        ), 1))
     jobs_many = _count_jobs(spark, lambda: t_many.apply(
         spark.createDataFrame(
             [(f"2026-01-{1 + i % 9:02d}", i, 2, "y") for i in range(200)], cols
@@ -150,11 +158,20 @@ def test_partitioned_apply_job_count_independent_of_pairs(spark, tmp_path):
     assert len(got) == 200 and set(got.values()) == {2}
 
 
-def test_merge_plan_has_single_exchange(spark):
-    """The scale property behind the single job: the bucket repartition
-    is the ONLY exchange — dedup and the rank window both group on
-    (_bucket, keys), so HashPartitioning(_bucket) satisfies their
-    clustering and neither adds a shuffle."""
+@pytest.mark.parametrize(
+    "repartition",
+    [
+        lambda df: df.repartition(8, F.col("_bucket")),
+        lambda df: df.repartition(F.col("_bucket")),
+    ],
+    ids=["counted", "aqe_sized"],
+)
+def test_merge_plan_has_single_exchange(spark, repartition):
+    """The scale property behind the single merge write: the bucket
+    repartition is the ONLY exchange — dedup and the rank window both
+    group on (_bucket, keys), so HashPartitioning(_bucket) satisfies
+    their clustering and neither adds a shuffle, whether the partition
+    count is given or left to AQE."""
     from pyspark_streaming_base_spark.sinks.upsert import _keep_latest
 
     df = spark.createDataFrame(
@@ -162,11 +179,42 @@ def test_merge_plan_has_single_exchange(spark):
         "k BIGINT, seq BIGINT, v STRING, del BOOLEAN",
     ).withColumn("_bucket", F.pmod(F.xxhash64("k"), F.lit(8)))
     latest = _keep_latest(
-        df.repartition(8, F.col("_bucket")), ["k"], "seq", "del",
-        group_extra=["_bucket"],
+        repartition(df), ["k"], "seq", "del", group_extra=["_bucket"],
     )
     plan = latest._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "partitioned"])
+def test_apply_evaluates_batch_once(spark, tmp_path, partitioned):
+    """The bucket-id pass and the merge write share ONE evaluation of the
+    batch: a foreachBatch DataFrame re-runs its upstream plan (source
+    read, state-store restore and commit) on every action, so a Python
+    UDF on the key must see each input row exactly once."""
+    from pyspark.sql.types import LongType
+
+    from pyspark_streaming_base_spark.sinks.upsert import PartitionedUpsertTable
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_key(k):
+        seen.add(1)
+        return k
+
+    tag = F.udf(count_key, LongType())
+    batch = spark.range(50).select(
+        tag("id").alias("k"), F.lit(1).cast("bigint").alias("seq"),
+        F.lit("2026-01-01").alias("day"),
+    )
+    root = str(tmp_path / "t")
+    tbl = (
+        PartitionedUpsertTable(root, partition_col="day", key_cols=["k"], seq_col="seq")
+        if partitioned
+        else UpsertTable(root, key_cols=["k"], seq_col="seq")
+    )
+    tbl.apply(batch, 0)
+    assert seen.value == 50
+    assert tbl.read(spark).count() == 50
 
 
 def test_compact_job_count_independent_of_buckets(spark, tmp_path):
